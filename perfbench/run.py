@@ -5,8 +5,9 @@
 
 Run from the root of a checkout. The first call builds the program and
 the harness from source with sbt (perfbench/build.sbt) into the build
-directory ($CARGO_TARGET_DIR, default .bench_build); later calls reuse the
-build while the sources are unchanged. Each run starts one JVM, prints its
+directory ($CARGO_TARGET_DIR, default .bench_build) and writes the input
+tables there with the program's own generators; later calls reuse both
+while the sources are unchanged. Each run starts one JVM, prints its
 progress on stderr and, as the last line of stdout, one JSON object with
 `correct`, `attempted`, `failed` and `metrics`. The exit code is nonzero
 when any operation or output check failed, or when the run could not be
@@ -24,6 +25,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 RUN_TIMEOUT_S = 170
+RECORD_TIMEOUT_S = 3600  # PERFBENCH_RECORD runs every suite query (see README)
 BUILD_TIMEOUT_S = 840
 JAVA_OPTS = [
     # fixed heap and young generation, so peak RSS tracks what the
@@ -87,7 +89,7 @@ def run_child(cmd, cwd, env, timeout):
 
 def classpath(build_dir):
     """Builds program + harness if the sources changed; returns the
-    runtime classpath."""
+    runtime classpath and the source stamp."""
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala")):
         log(f"no program sources under {ROOT}/src/main/scala; run from a full checkout")
         sys.exit(2)
@@ -97,7 +99,7 @@ def classpath(build_dir):
         with open(cp_file) as f:
             old_stamp, cp = f.read().split("\n", 1)
         if old_stamp == stamp:
-            return cp.strip()
+            return cp.strip(), stamp
     log("building program and harness with sbt ...")
     t0 = time.time()
     env = dict(os.environ)
@@ -117,7 +119,40 @@ def classpath(build_dir):
     with open(cp_file, "w") as f:
         f.write(stamp + "\n" + cp + "\n")
     log(f"built in {time.time() - t0:.0f}s")
-    return cp
+    return cp, stamp
+
+
+def tables(build_dir, cp, stamp):
+    """Writes the input tables once per build: the program's own
+    generators, graft.tools.TpchGen and graft.tools.ScaleGen, at factor 1
+    (the row counts of TPC-H scale 0.1 and a 5000-doc corpus). Each
+    generator stops its SparkSession, so each gets its own JVM. Returns
+    the table directory."""
+    out = os.path.join(build_dir, "tables")
+    stamp_file = os.path.join(out, "stamp.txt")
+    if os.path.exists(stamp_file):
+        with open(stamp_file) as f:
+            if f.read().strip() == stamp:
+                return out
+    shutil.rmtree(out, ignore_errors=True)
+    scratch = os.path.join(build_dir, "gen-tmp")
+    os.makedirs(scratch, exist_ok=True)
+    t0 = time.time()
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(os.cpu_count() or 1))
+    for main in ("graft.tools.TpchGen", "graft.tools.ScaleGen"):
+        code, out_text = run_child(
+            ["java"] + JAVA_OPTS + [f"-Djava.io.tmpdir={scratch}",
+             f"-Dspark.local.dir={scratch}", "-cp", cp, main, out, "1"],
+            scratch, env, RUN_TIMEOUT_S)
+        if code != 0:
+            sys.stderr.write(out_text[-4000:])
+            log(f"{main} failed (exit {code})")
+            sys.exit(2)
+    shutil.rmtree(scratch, ignore_errors=True)
+    with open(stamp_file, "w") as f:
+        f.write(stamp + "\n")
+    log(f"generated input tables in {time.time() - t0:.0f}s")
+    return out
 
 
 def main():
@@ -132,16 +167,18 @@ def main():
 
     build_dir = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
     os.makedirs(build_dir, exist_ok=True)
-    cp = classpath(build_dir)
+    cp, stamp = classpath(build_dir)
+    table_dir = tables(build_dir, cp, stamp)
     work = os.path.join(build_dir, "work", f"{a.workload}-{os.getpid()}")
     out_dir = os.path.join(build_dir, "traces")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     cmd = ["java"] + JAVA_OPTS + [f"-Djava.io.tmpdir={work}/tmp", "-cp", cp,
         "perfbench.Main", "--workload", a.workload, "--seed", str(a.seed),
         "--seconds", str(a.seconds), "--trace", a.trace, "--root", ROOT,
-        "--work", work, "--out", out_dir, "--fault-at", str(a.fault_at)]
+        "--tables", table_dir, "--work", work, "--out", out_dir, "--fault-at", str(a.fault_at)]
     try:
-        code, out = run_child(cmd, work, dict(os.environ), RUN_TIMEOUT_S)
+        code, out = run_child(cmd, work, dict(os.environ), RECORD_TIMEOUT_S
+                              if "PERFBENCH_RECORD" in os.environ else RUN_TIMEOUT_S)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     lines = out.strip().splitlines()

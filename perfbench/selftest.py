@@ -40,7 +40,7 @@ def main():
             failures.append(what)
 
     base = ["--workload", "blq_agent", "--seed", "1", "--seconds", "1"]
-    code, res, err = run(base + ["--trace", "0", "--fault-at", "2"])
+    code, res, err = run(base + ["--trace", "0", "--fault-at", "1"])
     expect(code != 0, "a throwing operation makes the run exit nonzero")
     expect(res is not None and res["failed"] >= 1 and res["correct"] is False,
            "the result line counts the failed operation")

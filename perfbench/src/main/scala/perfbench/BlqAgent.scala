@@ -73,12 +73,11 @@ object BlqAgent {
   def run(ctx: Ctx): Outcome = {
     val fixtureDir = ctx.root.resolve("src/test/resources/logs")
     val layers = mutable.Map[String, Double]()
-    val (s, setupSecs) = ctx.setups { i =>
-      val dir = ctx.work.resolve(s"blq-$i")
+    val (s, setupSecs) = ctx.setup {
+      val dir = ctx.work.resolve("blq")
       Files.createDirectories(dir.resolve("logs"))
       val engine = GraftEngine(ctx.spark, dir.resolve("store").toString)
       val s = new Session(dir, engine, new Serve(engine))
-      // prior runs share one seeded stream, so every set-up is identical
       val gen = new LogGen(fixtureDir, new Random(ctx.seed * 7919 + 1))
       for (k <- 0 until priorRuns) importLog(ctx, s, gen.next(), s"prior-$k", "setup")
       s
@@ -94,7 +93,7 @@ object BlqAgent {
     // gcc-template runs whose counts are read back after the measured
     // window, so every step times the same mix of calls
     val readBacks = mutable.ArrayBuffer[(Long, (Int, Int))]()
-    val secs = ctx.measure { step =>
+    val secs = ctx.measure() { step =>
       val req = s"step-$step"
       val (content, expect) = gen.next()
       val serial = importLog(ctx, s, (content, expect), req, "import")
@@ -105,8 +104,8 @@ object BlqAgent {
       // then the rest in seeded order
       ("last" +: rnd.shuffle(readTools.filterNot(_ == "last"))).foreach { t =>
         val r = read(ctx, s, t, rnd, req, "read")
-        if (ctx.traced) r.foreach(wall => direct(ctx, s, t).foreach {
-          case (b, e) => apiSplit += ((wall, b, e)) })
+        if (ctx.traced) r.foreach { case (wall, args) => direct(ctx, s, t, args).foreach {
+          case (b, e) => apiSplit += ((wall, b, e)) } }
       }
     }
 
@@ -187,9 +186,10 @@ object BlqAgent {
       }
     }
 
-  /** One read tool call; returns its wall seconds when it succeeded. */
+  /** One read tool call; returns its wall seconds and arguments when it
+    * succeeded. */
   private def read(ctx: Ctx, s: Session, tool: String, rnd: Random, req: String,
-      cls: String): Option[Double] = {
+      cls: String): Option[(Double, Map[String, String])] = {
     val last = s.lastSerial
     val args: Map[String, String] = tool match {
       case "errors" | "warnings" => Map("limit" -> "10")
@@ -204,7 +204,7 @@ object BlqAgent {
     }
     ctx.op(cls, s"$tool ($req)", req)(s.serve.call(tool, args))(errorOf).map { doc =>
       RefRe.findFirstMatchIn(doc).foreach(m => s.lastRef = Some(m.group(1)))
-      ctx.ops.of(cls).last
+      (ctx.ops.of(cls).last, args)
     }
   }
   private val RefRe = """"ref":\s*"([^"]+)"""".r
@@ -220,21 +220,28 @@ object BlqAgent {
     ((t1 - t0) / 1e9, (t2 - t0) / 1e9, evs.size, content.getBytes(UTF_8).length.toLong)
   }
 
-  /** The same read built and collected directly through GraftEngine
-    * (traced runs only): (build s, exec s), for tools that map to one
-    * engine DataFrame. */
-  private def direct(ctx: Ctx, s: Session, tool: String): Option[(Double, Double)] = {
+  /** The same read, with the same arguments, built and collected
+    * directly through GraftEngine the way Serve builds it (traced runs
+    * only): (build s, exec s), for tools that map to one engine
+    * DataFrame. */
+  private def direct(ctx: Ctx, s: Session, tool: String,
+      args: Map[String, String]): Option[(Double, Double)] = {
     val e = s.engine
     val last = s.lastSerial
+    def limit = args("limit").toInt
     val build: Option[() => org.apache.spark.sql.DataFrame] = tool match {
-      case "errors" => Some(() => e.errors(10))
-      case "warnings" => Some(() => e.warnings(10))
+      case "errors" => Some(() => e.errors(limit))
+      case "warnings" => Some(() => e.warnings(limit))
       case "status" => Some(() => e.status())
-      case "history" => Some(() => e.history(20))
+      case "history" => Some(() => e.history(limit))
       case "summary" => Some(() => e.summary())
-      case "diff" => Some(() => e.diff(last - 1, last))
-      case "query" => Some(() => e.query.df().filter(FilterLang.parse("severity=error")).limit(50))
-      case "events" => Some(() => e.analytics.eventsForRun(last).limit(50))
+      case "diff" => Some(() => e.diff(args("run1").toLong, args("run2").toLong))
+      case "query" => Some { () =>
+        val df = e.query.df()
+        FilterLang.parseAll(args("filter").split(";").map(_.trim).filter(_.nonEmpty).toSeq)
+          .fold(df)(c => df.filter(c)).limit(limit)
+      }
+      case "events" => Some(() => e.analytics.eventsForRun(last).limit(limit))
       case _ => None
     }
     build.map { b =>

@@ -11,8 +11,8 @@ import graft.ml.CorpusPipeline.StageStat
 
 /** The corpus ingest loop: `CorpusPipeline.ingestAndMaintain` with all
   * six stored-index legs plus the takedown drain (the configuration of
-  * `graft.Bench`'s ingest screen). Set-up generates a corpus and builds
-  * the indexes over it minus a seeded held-out set; the measured
+  * `graft.Bench`'s ingest screen). Set-up builds the indexes over the
+  * first docs of the generated corpus minus a seeded held-out set; the measured
   * micro-batches bring held-out docs, exact and near copies of indexed
   * docs (new ids), and takedown requests for indexed docs. */
 object CorpusLoop {
@@ -41,27 +41,28 @@ object CorpusLoop {
     val spark = ctx.spark
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // the first `corpusDocs` docs of the generated corpus, and their vectors
+    def docs = spark.read.parquet(ctx.tables.resolve("documents.parquet").toString)
+      .filter(col("doc_id") < corpusDocs).select(col("doc_id"), col("text"))
+    def vecs = spark.read.parquet(ctx.tables.resolve("embeddings.parquet").toString)
+      .filter(col("vec_id") < corpusDocs)
+    val texts = docs.as[(Long, String)].collect().toMap
+    require(texts.size == corpusDocs, s"${texts.size} generated docs below id $corpusDocs")
     val r = new Random(ctx.seed)
-    val corpus = Gen.docs(r, corpusDocs)
-    val embs = Gen.embeddings(r, corpusDocs)
-    val texts = corpus.map(row => row.getLong(0) -> row.getString(1)).toMap
     // held-out ids all have embeddings, so the IVF leg appends real vectors
     val held = r.shuffle((1 until corpusDocs).toVector).take(heldOut).sorted
     val heldSet = held.toSet
     val indexed = (0 until corpusDocs).map(_.toLong).filterNot(i => heldSet(i.toInt)).toVector
 
-    val (loop, setupSecs) = ctx.setups { i =>
-      val docs = spark.createDataFrame(java.util.Arrays.asList(corpus: _*), Gen.docSchema)
-        .select(col("doc_id"), col("text"))
-      val vecs = spark.createDataFrame(java.util.Arrays.asList(embs: _*), Gen.embSchema)
-        .localCheckpoint()
+    val (loop, setupSecs) = ctx.setup {
+      val vs = vecs.localCheckpoint()
       val base = docs.filter(!col("doc_id").isin(held.map(_.toLong): _*)).localCheckpoint()
       val embedFn: DataFrame => DataFrame =
-        d => vecs.join(d.select(col("doc_id").as("vec_id")), Seq("vec_id"))
-      val t = (n: String) => s"pb${i}_$n"
-      val lexDir = ctx.work.resolve(s"corpus-$i/lex")
-      val ngDir = ctx.work.resolve(s"corpus-$i/ngram")
-      val stateDir = ctx.work.resolve(s"corpus-$i/forget")
+        d => vs.join(d.select(col("doc_id").as("vec_id")), Seq("vec_id"))
+      val t = (n: String) => s"pb_$n"
+      val lexDir = ctx.work.resolve("corpus/lex")
+      val ngDir = ctx.work.resolve("corpus/ngram")
+      val stateDir = ctx.work.resolve("corpus/forget")
       BandIndex.write(base, t("band"), n = 3, k = 12, bands = 4, buckets = 4)
       LexIndex.build(base, lexDir.toString)
       IvfIndex.write(embedFn(base), t("ivf"), cells = 8, iters = 0, buckets = 4)
@@ -125,7 +126,7 @@ object CorpusLoop {
         val words = texts(src).split(" ").toVector
         val exact = pick.nextBoolean()
         val text = if (exact) texts(src)
-          else words.patch(pick.nextInt(words.size), Seq(Gen.vocab(pick.nextInt(Gen.vocab.size))), 1).mkString(" ")
+          else words.patch(pick.nextInt(words.size), Seq(words(pick.nextInt(words.size))), 1).mkString(" ")
         if (exact) exactCopies += nextId
         rows += ((nextId, text)); nextId += 1
       }
@@ -147,7 +148,7 @@ object CorpusLoop {
     }
 
     val secs = try {
-      val s = ctx.measure(b => batch(b, "batch"))
+      val s = ctx.measure()(b => batch(b, "batch"))
       require(nextHeld <= held.size, s"held-out set exhausted after ${nextHeld / batchDocs} batches")
       s
     } finally q.stop()
@@ -218,7 +219,7 @@ object CorpusLoop {
     * Jobs touching no index belong to the pipeline itself. */
   private def touches(j: JobRec, loop: Loop): String = {
     val p = j.plan
-    def table(n: String) = s"""pb\\d+_$n(?:_keys|_centroids|_stats)?(?![_a-z])""".r.findFirstIn(p).isDefined
+    def table(n: String) = s"""pb_$n(?:_keys|_centroids|_stats)?(?![_a-z])""".r.findFirstIn(p).isDefined
     if (table("band")) "BandIndex"
     else if (table("sig")) "SigIndex"
     else if (table("fuzzy")) "FuzzyJoin"

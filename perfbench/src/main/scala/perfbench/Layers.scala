@@ -3,7 +3,7 @@ package perfbench
 /** Every per-layer metric a traced run prints, with its unit, in the
   * order of BENCHMARK.json. A layer a workload does not exercise reads 0
   * on it. Per-op values are means over the workload's user operations
-  * (blq_agent: tool calls; suite_sf0.01: queries; corpus_loop: batches). */
+  * (blq_agent: tool calls; suite_sf0.1: queries; corpus_loop: batches). */
 object Layers {
   val mlFiles: Seq[String] = Seq("BandIndex", "SigIndex", "NgramIndex", "FuzzyJoin",
     "LexIndex", "IvfIndex", "Tombstones", "Decontaminate", "CorpusPipeline")

@@ -1,14 +1,14 @@
 package perfbench
 
 import java.nio.file.{Files, Path, Paths}
-import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 
 /** Everything a workload needs: the session, its seed and time budget,
-  * the checkout root (for the parser fixtures), a private work dir, and
-  * the recorders. `jobs`/`plans` are registered only in traced runs. */
+  * the checkout root (for the parser fixtures), the generated input
+  * tables, a private work dir, and the recorders. `jobs`/`plans` are
+  * registered only in traced runs. */
 final class Ctx(val spark: SparkSession, val seed: Long, val seconds: Int,
-    val root: Path, val work: Path, val tracer: Tracer,
+    val root: Path, val tables: Path, val work: Path, val tracer: Tracer,
     val jobs: Option[JobListener], val plans: Option[PlanListener], val ops: Ops) {
   def traced: Boolean = tracer.enabled
   val nproc: Int = Host.nproc
@@ -18,26 +18,20 @@ final class Ctx(val spark: SparkSession, val seed: Long, val seconds: Int,
       check: T => Option[String] = (_: T) => None): Option[T] =
     ops.run(cls, name)(tracer.span(cls, req)(body))(check)
 
-  /** Runs set-up `Ctx.setupRuns` times (each into its own directory) and
-    * returns the last state with every set-up's wall time. */
-  def setups[S](body: Int => S): (S, Seq[Double]) = {
-    val secs = mutable.ArrayBuffer[Double]()
-    var last: Option[S] = None
-    for (i <- 0 until Ctx.setupRuns) {
-      val t0 = System.nanoTime()
-      last = Some(tracer.span("setup", s"setup-$i")(body(i)))
-      secs += (System.nanoTime() - t0) / 1e9
-    }
-    (last.get, secs.toSeq)
+  /** Runs set-up once, in a span; returns its state and wall seconds. */
+  def setup[S](body: => S): (S, Double) = {
+    val t0 = System.nanoTime()
+    val st = tracer.span("setup", "setup")(body)
+    (st, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Runs `step` until `seconds` have passed since the first call (at
-    * least once); returns the measured wall seconds. */
-  def measure(step: Int => Unit): Double = tracer.span("measure", "measure") {
+  /** Runs `step` until `seconds` have passed since the first call, and
+    * at least `minSteps` times; returns the measured wall seconds. */
+  def measure(minSteps: Int = 1)(step: Int => Unit): Double = tracer.span("measure", "measure") {
     val t0 = System.nanoTime()
     val deadline = t0 + seconds * 1000000000L
     var i = 0
-    while (i == 0 || System.nanoTime() < deadline) { step(i); i += 1 }
+    while (i < minSteps || System.nanoTime() < deadline) { step(i); i += 1 }
     (System.nanoTime() - t0) / 1e9
   }
 
@@ -53,33 +47,28 @@ final class Ctx(val spark: SparkSession, val seed: Long, val seconds: Int,
   }
 }
 
-object Ctx {
-  /** Set-ups per run; `setup_s` is their median. Two keeps every run
-    * within its time budget (the first set-up also pays JIT warm-up). */
-  val setupRuns = 2
-}
-
-/** What a workload hands back: set-up times, measured wall time and the
+/** What a workload hands back: set-up time, measured wall time and the
   * timed operations' samples (the end-to-end inputs), the op classes
   * that count as user operations, and per-layer metrics (traced runs). */
-final case class Outcome(setupSecs: Seq[Double], measureSecs: Double,
+final case class Outcome(setupSecs: Double, measureSecs: Double,
     opClasses: Set[String], layers: Map[String, Double],
     detail: Seq[(String, Any)] = Nil)
 
 object Main {
   val workloads: Map[String, Ctx => Outcome] = Map(
     "blq_agent" -> BlqAgent.run,
-    "suite_sf0.01" -> Suite.run,
+    "suite_sf0.1" -> Suite.run,
     "corpus_loop" -> CorpusLoop.run)
 
   final case class Args(workload: String, seed: Long, seconds: Int, trace: Boolean,
-      root: Path, work: Path, out: Path, faultAt: Int)
+      root: Path, tables: Path, work: Path, out: Path, faultAt: Int)
 
   private def parse(args: Array[String]): Args = {
     val m = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     def need(k: String) = m.getOrElse(k, sys.error(s"missing --$k"))
     Args(need("workload"), need("seed").toLong, need("seconds").toInt,
       need("trace") == "1", Paths.get(need("root")).toAbsolutePath,
+      Paths.get(need("tables")).toAbsolutePath,
       Paths.get(need("work")).toAbsolutePath, Paths.get(need("out")).toAbsolutePath,
       m.get("fault-at").map(_.toInt).getOrElse(0))
   }
@@ -112,7 +101,7 @@ object Main {
     jobs.foreach(spark.sparkContext.addSparkListener)
     plans.foreach(spark.listenerManager.register)
     val ops = new Ops(a.faultAt)
-    val ctx = new Ctx(spark, a.seed, a.seconds, a.root, a.work, tracer, jobs, plans, ops)
+    val ctx = new Ctx(spark, a.seed, a.seconds, a.root, a.tables, a.work, tracer, jobs, plans, ops)
 
     val oc = try body(ctx) catch {
       case scala.util.control.NonFatal(e) =>
@@ -126,7 +115,7 @@ object Main {
     val samples = oc.opClasses.toSeq.flatMap(ops.of)
     require(samples.nonEmpty, "no successful timed operation")
     val e2e = Seq(
-      "setup_s" -> ("s", Stats.median(oc.setupSecs)),
+      "setup_s" -> ("s", oc.setupSecs),
       "op_p50_s" -> ("s", Stats.quantile(samples, 0.5)),
       "op_geomean_s" -> ("s", Stats.geomean(samples)),
       "ops_per_s" -> ("1/s", samples.size / oc.measureSecs),
