@@ -102,47 +102,52 @@ final class Runner(store: EventStore, blobs: BlobStore,
       if (Files.exists(live)) new String(Files.readAllBytes(live), StandardCharsets.UTF_8)
       else ""
 
-    // Phase 2: outcome + mirrored invocation + events + output blob.
-    store.appendOutcomes(Seq(Outcome(
-      attempt_id = attemptId, completed_at = completed,
-      duration_ms = Some(durationMs), exit_code = Some(exit), signal = None,
-      timeout = timedOut, date = dateOf(completed))))
+    // Phase 2: outcome + mirrored invocation + events + output blob, as
+    // one logical write: views re-register once, after the invocation
+    // row. Phase 1 above is a write of its own, so the pending attempt
+    // is visible through the SQL surface while the command runs.
+    store.asOneWrite {
+      store.appendOutcomes(Seq(Outcome(
+        attempt_id = attemptId, completed_at = completed,
+        duration_ms = Some(durationMs), exit_code = Some(exit), signal = None,
+        timeout = timedOut, date = dateOf(completed))))
 
-    val serial = store.nextRunSerial()
-    val inv = Invocation(
-      id = attemptId, run_serial = serial, session_id = sessionId,
-      source_name = sourceName, source_type = SourceType.Exec, tag = tag,
-      command = Some(cmdLine), cwd = cwd, executable_path = command.headOption,
-      started_at = started, duration_ms = Some(durationMs),
-      exit_code = Some(exit), hostname = Some(hostname),
-      platform = Some(sys.props.getOrElse("os.name", "unknown")),
-      arch = Some(sys.props.getOrElse("os.arch", "unknown")),
-      git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-      git_dirty = ctx.git.dirty,
-      environment = ctx.environment, ci = ctx.ci, metadata = None,
-      date = dateOf(started))
+      val serial = store.nextRunSerial()
+      val inv = Invocation(
+        id = attemptId, run_serial = serial, session_id = sessionId,
+        source_name = sourceName, source_type = SourceType.Exec, tag = tag,
+        command = Some(cmdLine), cwd = cwd, executable_path = command.headOption,
+        started_at = started, duration_ms = Some(durationMs),
+        exit_code = Some(exit), hostname = Some(hostname),
+        platform = Some(sys.props.getOrElse("os.name", "unknown")),
+        arch = Some(sys.props.getOrElse("os.arch", "unknown")),
+        git_commit = ctx.git.commit, git_branch = ctx.git.branch,
+        git_dirty = ctx.git.dirty,
+        environment = ctx.environment, ci = ctx.ci, metadata = None,
+        date = dateOf(started))
 
-    val hint =
-      if (formatHint != "auto") formatHint
-      else FormatRegistry.detectFormatFromCommand(cmdLine)
-    val parsed = FormatRegistry.parse(output, hint)
-    // Same commit order as the import paths: events and output land
-    // BEFORE the invocation row, so a crash mid-write leaves dangling
-    // (joined-away) events, never a committed run claiming zero events.
-    // The attempt/outcome lifecycle rows above are unaffected — status-
-    // from-absence semantics come from those, not from invocations.
-    writeEvents(attemptId, started, parsed)
-    writeOutput(attemptId, started, output)
-    store.appendRun(inv, Seq.empty)
+      val hint =
+        if (formatHint != "auto") formatHint
+        else FormatRegistry.detectFormatFromCommand(cmdLine)
+      val parsed = FormatRegistry.parse(output, hint)
+      // Same commit order as the import paths: events and output land
+      // BEFORE the invocation row, so a crash mid-write leaves dangling
+      // (joined-away) events, never a committed run claiming zero events.
+      // The attempt/outcome lifecycle rows above are unaffected — status-
+      // from-absence semantics come from those, not from invocations.
+      writeEvents(attemptId, started, parsed)
+      writeOutput(attemptId, started, output)
+      store.appendRun(inv, Seq.empty)
 
-    val errors = parsed.count(_.severity == Severity.Error).toLong
-    val warnings = parsed.count(_.severity == Severity.Warning).toLong
-    val status =
-      if (timedOut) "TIMEOUT"
-      else if (exit != 0 || errors > 0) "FAIL"
-      else if (warnings > 0) "WARN"
-      else "OK"
-    RunResult(attemptId, serial, exit, timedOut, status, errors, warnings, durationMs)
+      val errors = parsed.count(_.severity == Severity.Error).toLong
+      val warnings = parsed.count(_.severity == Severity.Warning).toLong
+      val status =
+        if (timedOut) "TIMEOUT"
+        else if (exit != 0 || errors > 0) "FAIL"
+        else if (warnings > 0) "WARN"
+        else "OK"
+      RunResult(attemptId, serial, exit, timedOut, status, errors, warnings, durationMs)
+    }
   }
 
   /** Import existing content as a completed run without a subprocess
@@ -162,19 +167,21 @@ final class Runner(store: EventStore, blobs: BlobStore,
     // mid-import leaves dangling (joined-away) event rows, never a
     // committed run that claims zero events. The synthetic exit code
     // mirrors the tally-derived status instead of an unconditional 0.
-    writeEvents(id, started, parsed)
-    writeOutput(id, started, content)
-    store.appendRun(Invocation(
-      id = id, run_serial = serial, session_id = sessionId,
-      source_name = sourceName, source_type = sourceType, tag = tag,
-      command = None, cwd = None, executable_path = None,
-      started_at = started, duration_ms = None,
-      exit_code = Some(if (errors > 0) 1 else 0),
-      hostname = None, platform = None, arch = None,
-      git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-      git_dirty = ctx.git.dirty,
-      environment = ctx.environment, ci = ctx.ci, metadata = None,
-      date = dateOf(started)), Seq.empty)
+    store.asOneWrite {
+      writeEvents(id, started, parsed)
+      writeOutput(id, started, content)
+      store.appendRun(Invocation(
+        id = id, run_serial = serial, session_id = sessionId,
+        source_name = sourceName, source_type = sourceType, tag = tag,
+        command = None, cwd = None, executable_path = None,
+        started_at = started, duration_ms = None,
+        exit_code = Some(if (errors > 0) 1 else 0),
+        hostname = None, platform = None, arch = None,
+        git_commit = ctx.git.commit, git_branch = ctx.git.branch,
+        git_dirty = ctx.git.dirty,
+        environment = ctx.environment, ci = ctx.ci, metadata = None,
+        date = dateOf(started)), Seq.empty)
+    }
     val status =
       if (errors > 0) "FAIL" else if (warnings > 0) "WARN" else "OK"
     RunResult(id, serial, if (errors > 0) 1 else 0, timedOut = false,
@@ -208,26 +215,30 @@ final class Runner(store: EventStore, blobs: BlobStore,
       .withColumn("date", lit(dateOf(started)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Same commit order as importContent: events first, invocation
-      // row last — a crash mid-ingest leaves dangling events, never a
-      // committed run row claiming a clean zero-event import.
-      store.appendEvents(parsed)
+      // The tally fills the persisted frame the event write then
+      // reads. Same commit order as importContent: events first,
+      // invocation row last — a crash mid-ingest leaves dangling
+      // events, never a committed run row claiming a clean zero-event
+      // import.
       val tallies = parsed.agg(
         count(when(col("severity") === Severity.Error, 1)).as("e"),
         count(when(col("severity") === Severity.Warning, 1)).as("w"))
         .head()
       val (errors, warnings) = (tallies.getLong(0), tallies.getLong(1))
-      store.appendRun(Invocation(
-        id = id, run_serial = serial, session_id = sessionId,
-        source_name = Some(pathGlob), source_type = SourceType.Import, tag = tag,
-        command = Some(s"import $pathGlob"), cwd = None, executable_path = None,
-        started_at = started, duration_ms = None,
-        exit_code = Some(if (errors > 0) 1 else 0),
-        hostname = None, platform = None, arch = None,
-        git_commit = ctx.git.commit, git_branch = ctx.git.branch,
-        git_dirty = ctx.git.dirty,
-        environment = ctx.environment, ci = ctx.ci, metadata = None,
-        date = dateOf(started)), Seq.empty)
+      store.asOneWrite {
+        store.appendEvents(parsed)
+        store.appendRun(Invocation(
+          id = id, run_serial = serial, session_id = sessionId,
+          source_name = Some(pathGlob), source_type = SourceType.Import, tag = tag,
+          command = Some(s"import $pathGlob"), cwd = None, executable_path = None,
+          started_at = started, duration_ms = None,
+          exit_code = Some(if (errors > 0) 1 else 0),
+          hostname = None, platform = None, arch = None,
+          git_commit = ctx.git.commit, git_branch = ctx.git.branch,
+          git_dirty = ctx.git.dirty,
+          environment = ctx.environment, ci = ctx.ci, metadata = None,
+          date = dateOf(started)), Seq.empty)
+      }
       val status =
         if (errors > 0) "FAIL" else if (warnings > 0) "WARN" else "OK"
       RunResult(id, serial, if (errors > 0) 1 else 0, timedOut = false,

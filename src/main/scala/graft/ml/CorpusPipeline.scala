@@ -889,10 +889,10 @@ object CorpusPipeline {
         .select(col("doc_id")).distinct().count())
       else None
     }
-    def tableCount(table: String): Option[Long] =
+    def tableCount(table: String, idCol: String = "doc_id"): Option[Long] =
       if (Tombstones.exists(spark, table))
         Some(spark.table(Tombstones.tableFor(table))
-          .select(col("doc_id")).distinct().count())
+          .select(col(idCol)).distinct().count())
       else None
     maint.forgetFeed.foreach { fc =>
       val hw = readForgetHw(spark, fc.stateDir)
@@ -918,7 +918,8 @@ object CorpusPipeline {
       rows += (("tombstones", "lex", n.toDouble)))
     maint.ngramIndex.flatMap(ng => dirCount(s"${ng.dir}/tombstones"))
       .foreach(n => rows += (("tombstones", "ngram", n.toDouble)))
-    maint.ivfTable.flatMap(tableCount).foreach(n =>
+    // IVF tombstones key on vec_id (IvfIndex.addTombstones)
+    maint.ivfTable.flatMap(tableCount(_, "vec_id")).foreach(n =>
       rows += (("tombstones", "ivf", n.toDouble)))
     maint.sigIndex.flatMap(s => tableCount(s.table)).foreach(n =>
       rows += (("tombstones", "sig", n.toDouble)))
@@ -1549,12 +1550,22 @@ object CorpusPipeline {
                 org.apache.spark.sql.SparkSession.setActiveSession(spark)
                 barIds(spark, fc.stateDir, ids.select(col("doc_id"))) })
             }
-            val parts = fc.store match {
+            val forgot = scala.util.Try(fc.store match {
               case Some(st) => forgetWithStore(spark, maint, st, ids)
               case None => forget(spark, maint, ids); Seq.empty
+            })
+            // both legs settle before a failure propagates (the
+            // FuzzyJoin dual-await idiom): a failed forget must not
+            // leave the bar running unobserved, and a second failure
+            // rides along as suppressed rather than vanishing
+            val barred = scala.util.Try(scala.concurrent.Await.result(barF,
+              scala.concurrent.duration.Duration.Inf))
+            (forgot, barred) match {
+              case (scala.util.Failure(f), scala.util.Failure(b)) => f.addSuppressed(b)
+              case _ =>
             }
-            scala.concurrent.Await.result(barF,
-              scala.concurrent.duration.Duration.Inf)
+            val parts = forgot.get
+            barred.get
             // high-water AFTER the forget: a crash in between replays
             // the slice into idempotent tombstone adds and an
             // already-clean store (at-least-once, exactly-once effect)

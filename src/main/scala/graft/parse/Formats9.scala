@@ -42,7 +42,7 @@ object ClangTidyParser extends LogParser {
   val tool = "clang-tidy"
   // /src/foo.cpp:42:10: warning: do not use C-style casts [cppcoreguidelines-pro-type-cstyle-cast]
   private val diag =
-    """^([^:\s]+\.(?:c|cc|cpp|cxx|h|hpp|m|mm)):(\d+):(\d+):\s*(error|warning|note):\s*(.*?)\s*\[([\w.,-]+)\]$""".r
+    """^([^:\s]+\.(?:c|cc|cpp|cxx|h|hpp|m|mm)):(\d+):(\d+):\s*(error|warning|note):\s*(.*?)\s*\[(\w[\w.,-]*)\]$""".r
   // notes carry no [check] suffix ("note: insert an explicit cast…") —
   // parse them too, but keep them OUT of sniff: the suffix is what
   // separates clang-tidy from plain gcc output in registry scoring.
@@ -51,7 +51,8 @@ object ClangTidyParser extends LogParser {
 
   // gcc's regex matches these lines too; the mandatory [check-name]
   // suffix + tripled score wins the tie on clang-tidy output while
-  // plain gcc output (no suffix) never matches here.
+  // gcc output never matches here: it has no suffix, or a `[-W…]`
+  // option suffix, and check names never start with '-'.
   def sniff(lines: Array[String]): Int =
     lines.count(l => diag.findFirstIn(l).isDefined) * 3
 

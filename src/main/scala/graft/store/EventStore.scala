@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model._
 
 /** Append-only partitioned-Parquet storage — the Spark-native shape of
@@ -25,8 +26,14 @@ import graft.model._
   *  - `run_serial` is persisted at write time (single writer per store,
   *    like the reference's lock-guarded get_next_run_number) so no read
   *    path ever needs a global ROW_NUMBER window (§7.4 risk 1);
-  *  - schema drift tolerated on read via mergeSchema
-  *    (= union_by_name=true, schema.sql:51).
+  *  - schema drift tolerated on read (= union_by_name=true,
+  *    schema.sql:51): each table's schema is inferred with mergeSchema
+  *    once per file set — its data files' (path, length, mtime) — and
+  *    handed to every later read while that set is unchanged. The
+  *    store's own appends carry the cached schema forward when it
+  *    already covers the rows written; any other change to the files
+  *    (an external writer, compaction, prune, a migration rewrite)
+  *    re-infers on the next read.
   */
 class EventStore(val spark: SparkSession, val root: String) {
   import spark.implicits._
@@ -66,29 +73,44 @@ class EventStore(val spark: SparkSession, val root: String) {
     }
   graft.plans.InvocationDatePruning.register(path("events"), dateSource)
 
-  private def writer[T](ds: Dataset[T], cols: Seq[String]) =
-    ds.write.mode(SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy(cols: _*)
-
   // Registered temp views (Views.registerAll) hold LogicalRelations
   // whose InMemoryFileIndex snapshots the file listing at creation —
   // refreshByPath only refreshes CACHED datasets, so without active
   // re-registration, rows appended AFTER registration are invisible
   // through spark.sql() while the Scala facade (fresh reads per call)
-  // sees them. Views.registerAll installs itself here; every append
-  // re-registers with fresh listings.
+  // sees them. Views.registerAll installs itself here; every logical
+  // write ([[asOneWrite]]) re-registers once with fresh listings.
   @volatile private var refreshHook: () => Unit = () => ()
 
-  /** Install the post-append refresh (single slot, idempotent to
+  /** Install the post-write refresh (single slot, idempotent to
     * re-registration). */
   def onAppendRefresh(f: () => Unit): Unit = refreshHook = f
 
-  private def refreshed(table: String): Unit = {
-    try spark.catalog.refreshByPath(path(table))
-    catch { case scala.util.control.NonFatal(_) => }
-    refreshHook()
-  }
+  private val writing: ThreadLocal[java.lang.Boolean] =
+    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
+
+  /** Run `body` — one or more appends — as one logical write: views are
+    * re-registered once, when it returns or throws (rows a failed write
+    * left on disk are visible to the Scala facade, so the SQL surface
+    * sees them too). A call inside another joins the enclosing write.
+    * Every append method is one logical write on its own. */
+  def asOneWrite[A](body: => A): A =
+    if (writing.get) body
+    else {
+      writing.set(true)
+      val result =
+        try body
+        catch {
+          case t: Throwable =>
+            writing.set(false)
+            try refreshHook()
+            catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+            throw t
+        }
+      writing.set(false)
+      refreshHook()
+      result
+    }
 
   /** Invalidate every table's file listing AND re-register views —
     * for DELETE-shaped maintenance (prune/clean): refreshByPath alone
@@ -105,20 +127,42 @@ class EventStore(val spark: SparkSession, val root: String) {
 
   // ---- write path (S9/S10) -------------------------------------------
 
-  def appendAttempts(attempts: Seq[Attempt]): Unit = {
-    writer(attempts.toDS(), Seq("date")).parquet(path("attempts"))
-    refreshed("attempts")
+  /** Append `ds` to `table`, date-partitioned. When the cached schema
+    * was current just before the write and already covers `ds`'s
+    * fields, it is carried forward to the new file set — provided
+    * every new file is this write's own (one write-job id): a file an
+    * external writer slipped in meanwhile forces a fresh inference. */
+  private def append[T](table: String, ds: Dataset[T]): Unit = {
+    val current = Option(schemas.get(table))
+      .filter(c => covers(c.schema, ds.schema) && c.files == dataFiles(table))
+    ds.write.mode(SaveMode.Append)
+      .option("compression", "zstd")
+      .partitionBy("date")
+      .parquet(path(table))
+    current.foreach { c =>
+      val after = dataFiles(table)
+      val jobIds = (after.keySet -- c.files.keySet).map(EventStore.writeJobId)
+      val ownWrite = c.files.forall { case (f, v) => after.get(f).contains(v) } &&
+        jobIds.size <= 1 && !jobIds.contains(None)
+      if (ownWrite) schemas.replace(table, c, c.copy(files = after))
+    }
+    try spark.catalog.refreshByPath(path(table))
+    catch { case scala.util.control.NonFatal(_) => }
   }
 
-  def appendOutcomes(outcomes: Seq[Outcome]): Unit = {
-    writer(outcomes.toDS(), Seq("date")).parquet(path("outcomes"))
-    refreshed("outcomes")
-  }
+  /** Every field of `written` is in `schema` with the same type. */
+  private def covers(schema: StructType, written: StructType): Boolean =
+    written.forall(f => schema.find(_.name == f.name)
+      .exists(_.dataType.catalogString == f.dataType.catalogString))
 
-  def appendOutputs(outputs: Seq[Output]): Unit = {
-    writer(outputs.toDS(), Seq("date")).parquet(path("outputs"))
-    refreshed("outputs")
-  }
+  def appendAttempts(attempts: Seq[Attempt]): Unit =
+    asOneWrite(append("attempts", attempts.toDS()))
+
+  def appendOutcomes(outcomes: Seq[Outcome]): Unit =
+    asOneWrite(append("outcomes", outcomes.toDS()))
+
+  def appendOutputs(outputs: Seq[Output]): Unit =
+    asOneWrite(append("outputs", outputs.toDS()))
 
   /** Write-side clustering for event files: sorted by (date, severity,
     * timestamp) within each task partition. The date prefix lets
@@ -137,11 +181,9 @@ class EventStore(val spark: SparkSession, val root: String) {
     * (a crash mid-write leaves dangling, joined-away events, never a
     * committed run row claiming zero events). Caller assigns
     * run_serial via [[nextRunSerial]]. */
-  def appendRun(inv: Invocation, events: Seq[Event]): Unit = {
-    if (events.nonEmpty)
-      writer(clusteredEvents(events.toDS()), Seq("date")).parquet(path("events"))
-    writer(Seq(inv).toDS(), Seq("date")).parquet(path("invocations"))
-    refreshed("invocations"); refreshed("events")
+  def appendRun(inv: Invocation, events: Seq[Event]): Unit = asOneWrite {
+    if (events.nonEmpty) append("events", clusteredEvents(events.toDS()))
+    append("invocations", Seq(inv).toDS())
     invDates.put(inv.id, inv.date.toString)
   }
 
@@ -156,8 +198,7 @@ class EventStore(val spark: SparkSession, val root: String) {
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
-    writer(clusteredEvents(aligned.as[Event]), Seq("date")).parquet(path("events"))
-    refreshed("events")
+    asOneWrite(append("events", clusteredEvents(aligned.as[Event])))
   }
 
   /** Next run serial. Single-writer discipline (reference holds a DB
@@ -175,8 +216,37 @@ class EventStore(val spark: SparkSession, val root: String) {
     fs.exists(p)
   }
 
-  private def read(table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path(table))
+  // table → its schema and the data files it was inferred over
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, EventStore.Inferred]()
+
+  /** The table's data files — path → (length, mtime) — as Spark's file
+    * index sees them: hidden names (`_SUCCESS`, `.crc`, `.prune_tmp_…`,
+    * `_temporary`) are skipped. Empty when the table does not exist. */
+  private def dataFiles(table: String): Map[String, (Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(path(table))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(dir: org.apache.hadoop.fs.Path): Iterator[(String, (Long, Long))] =
+      fs.listStatus(dir).iterator.filterNot(s => EventStore.hidden(s.getPath.getName))
+        .flatMap { s =>
+          if (s.isDirectory) walk(s.getPath)
+          else Iterator(s.getPath.toString -> ((s.getLen, s.getModificationTime)))
+        }
+    if (fs.exists(root)) walk(root).toMap else Map.empty
+  }
+
+  /** Read with the schema inferred for the current file set: the
+    * mergeSchema inference (a Spark job over every footer) runs only
+    * when the files changed since the last one. */
+  private def read(table: String): DataFrame = {
+    val files = dataFiles(table)
+    Option(schemas.get(table)).filter(_.files == files) match {
+      case Some(known) => spark.read.schema(known.schema).parquet(path(table))
+      case None =>
+        val df = spark.read.option("mergeSchema", "true").parquet(path(table))
+        schemas.put(table, EventStore.Inferred(files, df.schema))
+        df
+    }
+  }
 
   private def emptyDs[T: org.apache.spark.sql.Encoder]: DataFrame =
     spark.emptyDataset[T].toDF()
@@ -230,4 +300,26 @@ class EventStore(val spark: SparkSession, val root: String) {
       }
       .map(_.toString)
   }
+}
+
+object EventStore {
+  /** A table's schema as inferred over its data files, path → (length,
+    * mtime). */
+  private final case class Inferred(files: Map[String, (Long, Long)], schema: StructType)
+
+  /** Spark's hidden-path rule for file listings
+    * (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  private val PartFile = """part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}).*""".r
+
+  /** The write-job id Spark puts in a part file's name. */
+  private def writeJobId(file: String): Option[String] =
+    file.substring(file.lastIndexOf('/') + 1) match {
+      case PartFile(id) => Some(id)
+      case _ => None
+    }
 }

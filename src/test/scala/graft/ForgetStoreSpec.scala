@@ -338,6 +338,26 @@ class ForgetStoreSpec extends SparkSpec {
     }
   }
 
+  test("complianceReport counts IVF tombstones, which key on vec_id") {
+    import graft.ml.IvfIndex
+    val embs = Seq((10L, 1f), (11L, 2f), (12L, 3f), (13L, 4f))
+      .map { case (id, x) => (id, "x", Array(x, 1f, x * x)) }
+      .toDF("vec_id", "label", "embedding")
+    val tables = Seq("g_rep_ivf", "g_rep_ivf_centroids", "g_rep_ivf_stats",
+      "g_rep_ivf_tombstones")
+    try {
+      tables.foreach(t => graft.store.Bucketing.dropWithDir(spark, t))
+      IvfIndex.write(embs, "g_rep_ivf", cells = 2, iters = 1, buckets = 2)
+      IvfIndex.addTombstones(spark, "g_rep_ivf", Seq(10L, 12L).toDF("vec_id"))
+      val maint = CorpusPipeline.IndexMaintenance("g_rep_ivf_band",
+        n = 3, k = 12, bands = 4, threshold = 0.3, ivfTable = Some("g_rep_ivf"))
+      val rep = CorpusPipeline.complianceReport(spark, maint)
+        .as[(String, String, Double)].collect()
+        .map(r => (r._1, r._2) -> r._3).toMap
+      assert(rep(("tombstones", "ivf")) === 2.0)
+    } finally tables.foreach(t => graft.store.Bucketing.dropWithDir(spark, t))
+  }
+
   test("doomed-partition removal is exactly-once: a crash between rename-aside and delete completes as removal, never restores") {
     val dir = mkStore("doom2")
     try {

@@ -104,16 +104,17 @@ class MlSpec extends SparkSpec {
     // an empty reference set, which would pass the doc_id-refs check —
     // must take the join fallback, where it evaluates once per doc.
     // Inline it would run once per band row and a doc's bands could
-    // disagree on is_new. rand() >= 0 is vacuously true, so the pair
-    // set must equal the all-new full run's.
+    // disagree on is_new. The plan shows the path taken: the fallback
+    // joins the flag onto the band table, one join more than inline.
     import org.apache.spark.sql.functions.rand
-    val viaNonDet = asSet(TextDedup.minhashLshPairsIncremental(corpus,
-      isNew = rand() >= 0, n = 3, k = 12, bands = 4, threshold = 0.3,
-      minAgree = 5))
-    val allNew = asSet(TextDedup.minhashLshPairsIncremental(corpus,
-      isNew = $"doc_id" >= 0L, n = 3, k = 12, bands = 4, threshold = 0.3,
-      minAgree = 5))
-    assert(viaNonDet === allNew)
+    def joins(isNew: org.apache.spark.sql.Column): Int =
+      TextDedup.minhashLshPairsIncremental(corpus, isNew, n = 3, k = 12,
+        bands = 4, threshold = 0.3, minAgree = 5).queryExecution.analyzed
+        .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        .size
+    val inlineJoins = joins($"doc_id" >= 0L)
+    assert(joins(rand() >= 0) === inlineJoins + 1,
+      "a non-deterministic isNew must take the join fallback")
   }
 
   test("simhash: identical docs share signature, near-dups are close") {

@@ -481,6 +481,22 @@ class ParserSpec extends SparkSpec {
     assert(GccParser.sniff(fixture("clang_tidy_out.txt").linesIterator.toArray) > 0)
   }
 
+  test("gcc log with [-W…] option suffixes detects as gcc and keeps its error") {
+    // gcc tags warnings with the flag that enabled them; clang-tidy
+    // check names never start with '-', so these lines are not clang-tidy
+    val log = Seq(
+      "src/a.c:3:9: warning: unused variable 'x' [-Wunused-variable]",
+      "src/a.c:7:1: warning: control reaches end of non-void function [-Wreturn-type]",
+      "src/b.c:12:5: error: 'y' undeclared (first use in this function)",
+      "src/b.c:20:14: warning: comparison of integer expressions of different signedness [-Wsign-compare]"
+    ).mkString("\n")
+    assert(FormatRegistry.detect(log).map(_.format) === Some("gcc_text"))
+    val evs = FormatRegistry.parse(log)
+    assert(evs.count(_.severity == Severity.Error) === 1)
+    assert(evs.count(_.severity == Severity.Warning) === 3)
+    assert(evs.find(_.severity == Severity.Error).flatMap(_.ref_file) === Some("src/b.c"))
+  }
+
   test("prettier: warn files and syntax errors with positions") {
     val evs = PrettierParser.parse(fixture("prettier_check.txt"))
     assert(evs.count(_.severity == Severity.Warning) === 2)
